@@ -15,7 +15,7 @@ the reference crawler (``SingularGuyLeBorn/PubCrawler``, surveyed in
 - Search (field-scoped keyword compiler + exact cosine semantic top-k).
 - Training-data pipeline operators: dedup (exact/minhash-LSH/simhash/
   n-gram-jaccard/embedding), ANN similarity search, text quality
-  stats, multimodal column plumbing.
+  stats.
 
 Everything is DataFrame-API first; Python appears only inside
 Arrow-batched pandas UDFs (never per-row Python UDFs).

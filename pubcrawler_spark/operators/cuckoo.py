@@ -6,8 +6,11 @@ The cuckoo filter is the seen-set variant that supports DELETION —
 the capability bloom cannot express: un-seeing a URL re-admits it to
 the frontier (forced re-crawl of stale pages) without rebuilding the
 filter. Same sharding layout as ``operators/seen.py``: shard by
-``pmod(url_hash, n_shards)``, one binary blob row per shard, probe via
-broadcast ``mapInPandas`` (shard-join composes exactly like bloom's).
+``pmod(url_hash, n_shards)``, one binary table row per shard. The
+probe is seen.py's shared broadcast ``mapInPandas`` loop
+(``probe_broadcast``) and the checkpoint its shared shard format
+(``write_shards``); :class:`CuckooFilter` is the engine's
+``SeenFilter`` over these shards.
 
 Per-shard layout: ``n_buckets × 4`` uint16 slots. 16-bit fingerprints
 (0 reserved for empty); two candidate buckets ``i1 = h mod n_buckets``
@@ -35,11 +38,10 @@ here, so idempotent-insert is the deliberate choice.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from pubcrawler_spark.operators.seen import DriverFilter, probe_broadcast, read_shards, write_shards
 
 BUCKET_SLOTS = 4
 _FP_MASK = np.uint64(0xFFFF)
@@ -66,10 +68,20 @@ def _buckets(hashes: np.ndarray, fp: np.ndarray, n_buckets: int) -> tuple[np.nda
     return i1, i2
 
 
+def _table(blob: bytes) -> np.ndarray:
+    """A checkpointed / broadcast shard table as a (n_buckets, 4) view."""
+    return np.frombuffer(blob, np.uint16).reshape(-1, BUCKET_SLOTS)
+
+
 class CuckooShard:
     """One shard's table: (n_buckets, 4) uint16."""
 
     def __init__(self, n_buckets: int, table: np.ndarray | None = None):
+        # i2 = i1 ^ (fphash mod n) must stay in range and pair buckets
+        # both ways, and insert() keys its in-batch dedup on
+        # (fp, min(i1, i2)) packed into 64 bits: a power of two < 2**32
+        if n_buckets <= 0 or n_buckets & (n_buckets - 1) or n_buckets >= 2**32:
+            raise ValueError(f"n_buckets must be a power of two below 2**32, got {n_buckets}")
         self.n_buckets = n_buckets
         self.table = (
             table if table is not None else np.zeros((n_buckets, BUCKET_SLOTS), np.uint16)
@@ -183,8 +195,8 @@ class CuckooShard:
 
 
 class CuckooShards:
-    """Sharded filter with the same surface as seen.BloomShards:
-    add_hashes / delete_hashes / filter_unseen / write / read."""
+    """Sharded cuckoo filter: add_hashes / delete_hashes /
+    filter_unseen / write / read."""
 
     def __init__(self, n_shards: int, n_buckets: int, shards: dict[int, CuckooShard] | None = None):
         self.n_shards = n_shards
@@ -218,85 +230,38 @@ class CuckooShards:
         return n
 
     def filter_unseen(self, candidates: DataFrame) -> DataFrame:
-        """mapInPandas probe against broadcast tables (same shape as
-        BloomShards.filter_unseen; shard-join composes identically)."""
-        spark = candidates.sparkSession
-        bc = spark.sparkContext.broadcast(
-            {sid: s.table.tobytes() for sid, s in self.shards.items()}
+        """Broadcast probe (seen.probe_broadcast)."""
+        n_buckets = self.n_buckets
+        return probe_broadcast(
+            candidates,
+            {sid: s.table.tobytes() for sid, s in self.shards.items()},
+            self.n_shards,
+            lambda blob, h: CuckooShard(n_buckets, _table(blob)).contains(h),
         )
-        n_shards, n_buckets = self.n_shards, self.n_buckets
-        schema = candidates.schema
-
-        def _probe(it):
-            tables = {
-                sid: CuckooShard(n_buckets, np.frombuffer(b, np.uint16).reshape(-1, BUCKET_SLOTS).copy())
-                for sid, b in bc.value.items()
-            }
-            for pdf in it:
-                if not len(pdf):
-                    yield pdf
-                    continue
-                h = pdf["url_hash"].to_numpy(dtype=np.int64)
-                shard = np.mod(h, n_shards)
-                keep = np.ones(len(pdf), dtype=bool)
-                for sid in np.unique(shard):
-                    s = tables.get(int(sid))
-                    if s is None:
-                        continue
-                    mask = shard == sid
-                    keep[mask] = ~s.contains(h[mask])
-                yield pdf[keep]
-
-        return candidates.mapInPandas(_probe, schema=schema)
-
-    # -- checkpoint (pyarrow; no Spark job) --------------------------------
 
     def write(self, path: str) -> None:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        os.makedirs(path, exist_ok=True)
-        sids = sorted(self.shards)
-        tbl = pa.table(
-            {
-                "shard_id": pa.array(sids, pa.int32()),
-                "table_bytes": pa.array([self.shards[s].table.tobytes() for s in sids], pa.binary()),
-                "n_buckets": pa.array([self.n_buckets] * len(sids), pa.int64()),
-                "n_shards": pa.array([self.n_shards] * len(sids), pa.int32()),
-            }
+        write_shards(
+            path,
+            {"n_buckets": self.n_buckets, "n_shards": self.n_shards},
+            table_bytes={sid: s.table.tobytes() for sid, s in self.shards.items()},
         )
-        # geometry also goes in file-level metadata so a ZERO-shard
-        # checkpoint (an iteration where nothing was marked seen — every
-        # fetch missed, nothing robots-disallowed) round-trips to an
-        # empty filter instead of crashing resume
-        tbl = tbl.replace_schema_metadata(
-            {"n_shards": str(self.n_shards), "n_buckets": str(self.n_buckets)}
-        )
-        pq.write_table(tbl, os.path.join(path, "part-00000-cuckoo.parquet"))
 
     @classmethod
     def read(cls, path: str) -> "CuckooShards":
-        import pyarrow.parquet as pq
-
-        files = [f for f in os.listdir(path) if f.endswith(".parquet")]
-        t = pq.read_table(os.path.join(path, files[0]))
-        d = t.to_pydict()
-        if d["shard_id"]:
-            out = cls(int(d["n_shards"][0]), int(d["n_buckets"][0]))
-        else:
-            meta = {
-                (k.decode() if isinstance(k, bytes) else k):
-                (v.decode() if isinstance(v, bytes) else v)
-                for k, v in (t.schema.metadata or {}).items()
-            }
-            if "n_shards" not in meta or "n_buckets" not in meta:
-                raise ValueError(
-                    f"empty cuckoo shards at {path} with no geometry metadata "
-                    "(pre-r3 checkpoint?)"
-                )
-            out = cls(int(meta["n_shards"]), int(meta["n_buckets"]))
-        for sid, blob in zip(d["shard_id"], d["table_bytes"]):
-            out.shards[int(sid)] = CuckooShard(
-                out.n_buckets, np.frombuffer(blob, np.uint16).reshape(-1, BUCKET_SLOTS).copy()
-            )
+        geom, cols = read_shards(path, ("n_shards", "n_buckets"))
+        out = cls(**geom)
+        for sid, blob in zip(cols["shard_id"], cols["table_bytes"]):
+            out.shards[sid] = CuckooShard(out.n_buckets, _table(blob).copy())
         return out
+
+
+class CuckooFilter(DriverFilter):
+    """The engine's delete-capable seen filter: driver-held cuckoo shards
+    behind ``CrawlEngine.mark_unseen``."""
+
+    state_dir = "cuckoo_shards"
+
+    def delete(self, url_hashes) -> int:
+        # the seen LEDGER keeps the URL (it is crawl history); only the
+        # filter — which governs scheduling — forgets it
+        return self.shards.delete_hashes(np.asarray(url_hashes, dtype=np.int64))

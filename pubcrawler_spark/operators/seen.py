@@ -1,4 +1,4 @@
-"""URL-seen set (SURVEY.md J2/U2/V7): exact and bloom-sharded modes.
+"""URL-seen set (SURVEY.md J2/U2/V7): exact and bloom-sharded filters.
 
 The reference's seen-set semantics is an exact anti-join of new ids
 against already-indexed ids (/root/reference/src/search/
@@ -17,8 +17,10 @@ filter instead:
   (:func:`filter_unseen_bloom` ``mode=``):
 
   - ``"broadcast"`` — blobs collected + broadcast, probe is a
-    shuffle-free ``mapInPandas`` pass. Right while the blob table
-    (``n_bits/8 × n_shards`` bytes) fits a broadcast.
+    shuffle-free ``mapInPandas`` pass (:func:`probe_broadcast`, the one
+    probe loop every driver-held filter uses, cuckoo's included). Right
+    while the blob table (``n_bits/8 × n_shards`` bytes) fits a
+    broadcast.
   - ``"shard_join"`` — at 10^10 URLs / 1% FPP the blobs total ~12 GB,
     past broadcast: candidates shuffle ONCE on ``shard_id`` and meet
     their shard's single blob row in a cogrouped ``applyInPandas`` —
@@ -32,6 +34,12 @@ filter instead:
 
   No false negatives by construction (property-tested); false positives
   only drop re-crawls, never violate politeness.
+
+``CrawlEngine`` drives every configuration through one
+:class:`SeenFilter`, built by :func:`seen_filter`. Driver-held shards
+(bloom blobs, cuckoo tables) checkpoint in one format
+(:func:`write_shards`): one parquet row per shard, with the filter
+geometry also kept in the file metadata.
 """
 
 from __future__ import annotations
@@ -41,12 +49,54 @@ import os
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-from pubcrawler_spark.functions.hashing import murmur3_64_batch
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, functions as F
 
 SEEN_SCHEMA = "url_hash long, url_canon string"
 BLOOM_SCHEMA = "shard_id int, bloom_bytes binary, n_items long, n_bits long, n_hashes int"
+# column types of the driver-held shard checkpoint (write_shards)
+_SHARD_COLUMNS = {
+    "shard_id": pa.int32(),
+    "bloom_bytes": pa.binary(),
+    "table_bytes": pa.binary(),
+    "n_items": pa.int64(),
+    "n_bits": pa.int64(),
+    "n_hashes": pa.int32(),
+    "n_buckets": pa.int64(),
+    "n_shards": pa.int32(),
+}
+
+
+def _parquet_files(path: str) -> list[str]:
+    return [
+        os.path.join(path, f)
+        for f in os.listdir(path)
+        if f.startswith("part-") and f.endswith(".parquet")
+    ]
+
+
+def _count_parquet(path: str) -> int:
+    """Row count from parquet footers — no Spark job."""
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in _parquet_files(path))
+
+
+def _read_col(path: str, col: str, mask_col: str | None = None, mask_value=None) -> np.ndarray:
+    """Read one column from a parquet dir driver-side (pyarrow; no Spark
+    job). Used for small per-iteration deltas — the distributed twin for
+    huge deltas is build_bloom_delta_shards + OR-merge."""
+    arrays = []
+    for f in _parquet_files(path):
+        cols = [col] + ([mask_col] if mask_col else [])
+        t = pq.read_table(f, columns=cols)
+        a = t.column(col)
+        if mask_col is not None:
+            a = pc.filter(a, pc.equal(t.column(mask_col), mask_value))
+        arrays.append(a.to_numpy(zero_copy_only=False))
+    if not arrays:
+        return np.empty(0, dtype=np.int64)
+    return np.concatenate(arrays)
 
 
 def filter_unseen_exact(candidates: DataFrame, seen: DataFrame) -> DataFrame:
@@ -84,10 +134,15 @@ def _positions(hashes: np.ndarray, n_bits: int, n_hashes: int) -> np.ndarray:
     return ((h1[None, :] + i * h2[None, :]) % np.uint64(n_bits)).astype(np.int64)
 
 
-def bloom_build_bytes(hashes: np.ndarray, n_bits: int, n_hashes: int) -> bytes:
-    bits = np.zeros(n_bits // 8, dtype=np.uint8)
+def _set_bits(bits: np.ndarray, hashes: np.ndarray, n_bits: int, n_hashes: int) -> None:
+    """OR the hashes' positions into ``bits`` in place."""
     pos = _positions(hashes, n_bits, n_hashes)
     np.bitwise_or.at(bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
+
+
+def bloom_build_bytes(hashes: np.ndarray, n_bits: int, n_hashes: int) -> bytes:
+    bits = np.zeros(n_bits // 8, dtype=np.uint8)
+    _set_bits(bits, hashes, n_bits, n_hashes)
     return bits.tobytes()
 
 
@@ -99,6 +154,66 @@ def bloom_probe_bytes(blob: bytes, hashes: np.ndarray, n_bits: int, n_hashes: in
     pos = _positions(hashes, n_bits, n_hashes)
     hit = (bits[pos >> 3] & (1 << (pos & 7)).astype(np.uint8)) != 0
     return hit.all(axis=0)
+
+
+def probe_broadcast(candidates: DataFrame, shards: dict, n_shards: int, member) -> DataFrame:
+    """Drop candidates that probe positive against driver-held shards.
+
+    ``shards`` maps shard_id → a picklable payload and is broadcast
+    once; each batch is split by ``pmod(url_hash, n_shards)`` and
+    ``member(payload, hashes)`` returns the possibly-seen mask of one
+    shard's hashes. A ``mapInPandas`` pass — no shuffle of the candidate
+    side; a shard with no payload passes its candidates, and an empty
+    filter is no probe at all."""
+    if not shards:
+        return candidates
+    bc = candidates.sparkSession.sparkContext.broadcast(shards)
+
+    def _probe(it):
+        payloads = bc.value
+        for pdf in it:
+            h = pdf["url_hash"].to_numpy(dtype=np.int64)
+            shard = np.mod(h, n_shards)  # numpy % matches Spark pmod for int64
+            keep = np.ones(len(pdf), dtype=bool)
+            for sid in np.unique(shard):
+                payload = payloads.get(int(sid))
+                if payload is not None:
+                    mask = shard == sid
+                    keep[mask] = ~member(payload, h[mask])
+            yield pdf[keep]
+
+    return candidates.mapInPandas(_probe, schema=candidates.schema)
+
+
+def write_shards(path: str, geometry: dict[str, int], **per_shard: dict) -> None:
+    """Checkpoint driver-held shards (pyarrow; no Spark job): one parquet
+    file, one row per shard — ``shard_id``, then each ``per_shard``
+    column (shard_id → value), then the geometry. The geometry repeats
+    on every row, where Spark readers of the table take it, and also
+    sits in the file metadata, so a zero-shard checkpoint (an iteration
+    that marked nothing seen) reads back as an empty filter."""
+    sids = sorted(next(iter(per_shard.values())))
+    cols = {"shard_id": sids}
+    cols.update({name: [v[s] for s in sids] for name, v in per_shard.items()})
+    cols.update({name: [g] * len(sids) for name, g in geometry.items()})
+    tbl = pa.table({name: pa.array(v, _SHARD_COLUMNS[name]) for name, v in cols.items()})
+    os.makedirs(path, exist_ok=True)
+    pq.write_table(
+        tbl.replace_schema_metadata({name: str(g) for name, g in geometry.items()}),
+        os.path.join(path, "part-00000-shards.parquet"),
+    )
+
+
+def read_shards(path: str, geometry: tuple[str, ...]) -> tuple[dict[str, int], dict[str, list]]:
+    """Inverse of :func:`write_shards`: (geometry, columns as lists)."""
+    tbl = pq.read_table(_parquet_files(path)[0])
+    meta = {k.decode(): v.decode() for k, v in (tbl.schema.metadata or {}).items()}
+    cols = tbl.to_pydict()
+    try:
+        geom = {k: int(meta[k] if k in meta else cols[k][0]) for k in geometry}
+    except IndexError:
+        raise ValueError(f"shard checkpoint {path} records no geometry") from None
+    return geom, cols
 
 
 class BloomShards:
@@ -116,11 +231,11 @@ class BloomShards:
     degrades gracefully past capacity and is measured in tests.
     """
 
-    def __init__(self, n_shards: int, n_bits: int, n_hashes: int, blobs: dict[int, np.ndarray] | None = None):
+    def __init__(self, n_shards: int, n_bits: int, n_hashes: int):
         self.n_shards = n_shards
         self.n_bits = n_bits
         self.n_hashes = n_hashes
-        self.blobs: dict[int, np.ndarray] = blobs or {}
+        self.blobs: dict[int, np.ndarray] = {}
         self.n_items: dict[int, int] = {}
 
     @classmethod
@@ -130,7 +245,7 @@ class BloomShards:
 
     def add_hashes(self, hashes: np.ndarray) -> None:
         """OR the hashes into their shards (numpy; driver-side for small
-        deltas — the distributed twin is build_bloom_shards + OR merge)."""
+        deltas — the distributed twin is build_bloom_delta_shards + OR merge)."""
         if len(hashes) == 0:
             return
         shard = np.mod(hashes, self.n_shards)
@@ -140,8 +255,7 @@ class BloomShards:
             if blob is None:
                 blob = np.zeros(self.n_bits // 8, dtype=np.uint8)
                 self.blobs[int(sid)] = blob
-            pos = _positions(h, self.n_bits, self.n_hashes)
-            np.bitwise_or.at(blob, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
+            _set_bits(blob, h, self.n_bits, self.n_hashes)
             self.n_items[int(sid)] = self.n_items.get(int(sid), 0) + len(h)
 
     def add_blob_rows(self, rows) -> None:
@@ -164,98 +278,81 @@ class BloomShards:
             self.n_items[sid] = self.n_items.get(sid, 0) + int(r["n_items"])
 
     def filter_unseen(self, candidates: DataFrame) -> DataFrame:
-        """mapInPandas probe against broadcast blobs (no shuffle)."""
-        spark = candidates.sparkSession
-        bc = spark.sparkContext.broadcast(
-            {sid: b.tobytes() for sid, b in self.blobs.items()}
+        """Broadcast probe (:func:`probe_broadcast`)."""
+        n_bits, n_hashes = self.n_bits, self.n_hashes
+        return probe_broadcast(
+            candidates,
+            {sid: b.tobytes() for sid, b in self.blobs.items()},
+            self.n_shards,
+            lambda blob, h: bloom_probe_bytes(blob, h, n_bits, n_hashes),
         )
-        n_shards, n_bits, n_hashes = self.n_shards, self.n_bits, self.n_hashes
-        schema = candidates.schema
-
-        def _probe(it):
-            shards = bc.value
-            for pdf in it:
-                if not len(pdf):
-                    yield pdf
-                    continue
-                h = pdf["url_hash"].to_numpy(dtype=np.int64)
-                shard = np.mod(h, n_shards)
-                keep = np.ones(len(pdf), dtype=bool)
-                for sid in np.unique(shard):
-                    blob = shards.get(int(sid))
-                    if blob is None:
-                        continue
-                    mask = shard == sid
-                    keep[mask] = ~bloom_probe_bytes(blob, h[mask], n_bits, n_hashes)
-                yield pdf[keep]
-
-        return candidates.mapInPandas(_probe, schema=schema)
-
-    # -- checkpoint (pyarrow; no Spark job) ---------------------------------
 
     def write(self, path: str) -> None:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        os.makedirs(path, exist_ok=True)
-        sids = sorted(self.blobs)
-        tbl = pa.table(
-            {
-                "shard_id": pa.array(sids, pa.int32()),
-                "bloom_bytes": pa.array([self.blobs[s].tobytes() for s in sids], pa.binary()),
-                "n_items": pa.array([self.n_items.get(s, 0) for s in sids], pa.int64()),
-                "n_bits": pa.array([self.n_bits] * len(sids), pa.int64()),
-                "n_hashes": pa.array([self.n_hashes] * len(sids), pa.int32()),
-                "n_shards": pa.array([self.n_shards] * len(sids), pa.int32()),
-            }
+        write_shards(
+            path,
+            {"n_bits": self.n_bits, "n_hashes": self.n_hashes, "n_shards": self.n_shards},
+            bloom_bytes={sid: b.tobytes() for sid, b in self.blobs.items()},
+            n_items=self.n_items,
         )
-        pq.write_table(tbl, os.path.join(path, "part-00000-shards.parquet"))
 
     @classmethod
     def read(cls, path: str) -> "BloomShards":
-        import pyarrow.parquet as pq
-
-        files = [f for f in os.listdir(path) if f.endswith(".parquet")]
-        tbl = pq.read_table(os.path.join(path, files[0]))
-        d = tbl.to_pydict()
-        if not d["shard_id"]:
-            raise ValueError(f"empty seen_shards at {path}")
-        out = cls(int(d["n_shards"][0]), int(d["n_bits"][0]), int(d["n_hashes"][0]))
-        for sid, blob, n in zip(d["shard_id"], d["bloom_bytes"], d["n_items"]):
-            out.blobs[int(sid)] = np.frombuffer(blob, dtype=np.uint8).copy()
-            out.n_items[int(sid)] = int(n)
+        geom, cols = read_shards(path, ("n_shards", "n_bits", "n_hashes"))
+        out = cls(**geom)
+        for sid, blob, n in zip(cols["shard_id"], cols["bloom_bytes"], cols["n_items"]):
+            out.blobs[sid] = np.frombuffer(blob, dtype=np.uint8).copy()
+            out.n_items[sid] = n
         return out
 
 
 def build_bloom_shards(
     seen: DataFrame, n_shards: int = 32, fpp: float = 0.01, expected_per_shard: int | None = None
 ) -> DataFrame:
-    """seen(url_hash, ...) -> one bloom blob row per shard (V7 build).
+    """seen(url_hash, ...) -> one bloom blob row per shard (V7 build),
+    each shard sized to its own count (or ``expected_per_shard``)."""
+    return _build_shards(
+        seen, n_shards, lambda n: _bloom_params(expected_per_shard or max(n, 1), fpp)
+    )
 
-    ``applyInPandas`` over ``groupBy(shard_id)``: each shard's bits are
-    built map-side in numpy; output is n_shards tiny rows.
-    """
+
+def build_bloom_delta_shards(
+    delta: DataFrame, n_shards: int, n_bits: int, n_hashes: int
+) -> DataFrame:
+    """delta(url_hash, ...) → one FIXED-geometry blob row per non-empty
+    shard. Unlike :func:`build_bloom_shards` (which sizes each shard to
+    its own count), the geometry is pinned to the caller's filter so the
+    output blobs are OR-compatible with an existing shard table."""
+    return _build_shards(delta, n_shards, lambda n: (n_bits, n_hashes))
+
+
+def _build_shards(df: DataFrame, n_shards: int, geometry) -> DataFrame:
+    """``applyInPandas`` over ``groupBy(shard_id)``: each shard's bits
+    are built map-side in numpy at ``geometry(n_items)``; output is one
+    tiny row per non-empty shard."""
 
     def _build(key, pdf: pd.DataFrame) -> pd.DataFrame:
         h = pdf["url_hash"].to_numpy(dtype=np.int64)
-        n = expected_per_shard or max(len(h), 1)
-        n_bits, n_hashes = _bloom_params(n, fpp)
-        blob = bloom_build_bytes(h, n_bits, n_hashes)
-        return pd.DataFrame(
-            {
-                "shard_id": [key[0]],
-                "bloom_bytes": [blob],
-                "n_items": [len(h)],
-                "n_bits": [n_bits],
-                "n_hashes": [n_hashes],
-            }
-        )
+        n_bits, n_hashes = geometry(len(h))
+        return _blob_row(key[0], bloom_build_bytes(h, n_bits, n_hashes), len(h), n_bits, n_hashes)
 
     return (
-        seen.select("url_hash")
+        df.select("url_hash")
         .withColumn("shard_id", F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int"))
         .groupBy("shard_id")
         .applyInPandas(_build, schema=BLOOM_SCHEMA)
+    )
+
+
+def _blob_row(shard_id: int, blob: bytes, n_items: int, n_bits: int, n_hashes: int) -> pd.DataFrame:
+    """One BLOOM_SCHEMA row."""
+    return pd.DataFrame(
+        {
+            "shard_id": [shard_id],
+            "bloom_bytes": [blob],
+            "n_items": [n_items],
+            "n_bits": [n_bits],
+            "n_hashes": [n_hashes],
+        }
     )
 
 
@@ -280,33 +377,13 @@ def filter_unseen_bloom(
         return _filter_unseen_bloom_shard_join(candidates, bloom_shards, n_shards)
     if mode != "broadcast":
         raise ValueError(f"unknown probe mode {mode!r} (expected 'broadcast' or 'shard_join')")
-    spark = candidates.sparkSession
     blobs = {
         r["shard_id"]: (r["bloom_bytes"], r["n_bits"], r["n_hashes"])
         for r in bloom_shards.collect()
     }
-    bc = spark.sparkContext.broadcast(blobs)
-    schema = candidates.schema
-
-    def _probe(it):
-        shards = bc.value
-        for pdf in it:
-            if not len(pdf):
-                yield pdf
-                continue
-            h = pdf["url_hash"].to_numpy(dtype=np.int64)
-            shard = np.mod(h, n_shards)  # numpy % matches Spark pmod for int64
-            keep = np.ones(len(pdf), dtype=bool)
-            for sid in np.unique(shard):
-                entry = shards.get(int(sid))
-                if entry is None:
-                    continue
-                mask = shard == sid
-                blob, n_bits, n_hashes = entry
-                keep[mask] = ~bloom_probe_bytes(blob, h[mask], n_bits, n_hashes)
-            yield pdf[keep]
-
-    return candidates.mapInPandas(_probe, schema=schema)
+    return probe_broadcast(
+        candidates, blobs, n_shards, lambda e, h: bloom_probe_bytes(e[0], h, e[1], e[2])
+    )
 
 
 def _filter_unseen_bloom_shard_join(
@@ -342,34 +419,6 @@ def _filter_unseen_bloom_shard_join(
         cand.groupBy("__shard_id")
         .cogroup(blobs.groupBy("__shard_id"))
         .applyInPandas(_probe, schema=schema)
-    )
-
-
-def build_bloom_delta_shards(
-    delta: DataFrame, n_shards: int, n_bits: int, n_hashes: int
-) -> DataFrame:
-    """delta(url_hash, ...) → one FIXED-geometry blob row per non-empty
-    shard. Unlike :func:`build_bloom_shards` (which sizes each shard to
-    its own count), the geometry is pinned to the caller's filter so the
-    output blobs are OR-compatible with an existing shard table."""
-
-    def _build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        h = pdf["url_hash"].to_numpy(dtype=np.int64)
-        return pd.DataFrame(
-            {
-                "shard_id": [key[0]],
-                "bloom_bytes": [bloom_build_bytes(h, n_bits, n_hashes)],
-                "n_items": [len(h)],
-                "n_bits": [n_bits],
-                "n_hashes": [n_hashes],
-            }
-        )
-
-    return (
-        delta.select("url_hash")
-        .withColumn("shard_id", F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int"))
-        .groupBy("shard_id")
-        .applyInPandas(_build, schema=BLOOM_SCHEMA)
     )
 
 
@@ -414,21 +463,215 @@ def update_bloom_shards(
             n_items = 0
         if len(d_pdf):
             h = d_pdf["url_hash"].to_numpy(dtype=np.int64)
-            pos = _positions(h, n_bits, n_hashes)
-            np.bitwise_or.at(bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
+            _set_bits(bits, h, n_bits, n_hashes)
             n_items += len(h)
-        return pd.DataFrame(
-            {
-                "shard_id": [key[0]],
-                "bloom_bytes": [bits.tobytes()],
-                "n_items": [n_items],
-                "n_bits": [n_bits],
-                "n_hashes": [n_hashes],
-            }
-        )
+        return _blob_row(key[0], bits.tobytes(), n_items, n_bits, n_hashes)
 
     return (
         d.groupBy("__shard_id")
         .cogroup(b.groupBy("__shard_id"))
         .applyInPandas(_merge, schema=BLOOM_SCHEMA)
     )
+
+
+# ---------------------------------------------------------------------------
+# the seen filter CrawlEngine drives
+# ---------------------------------------------------------------------------
+
+
+class SeenFilter:
+    """The URL-seen set as ``CrawlEngine`` drives it. Per iteration the
+    engine probes the candidates, writes :meth:`seen_rows` of the delta
+    (fetched ∪ robots-disallowed) as the ``seen`` dir, hands that dir to
+    :meth:`add` before the commit rename and the committed ``iter=K``
+    dir to :meth:`commit` after it; :meth:`seen_total` gives the
+    manifest's seen-set size and :meth:`start` takes the committed dirs
+    at each ``run()``. The base is the probabilistic filters'
+    append-only ledger of per-iteration deltas, with the filter's own
+    checkpoint in ``iter=K/<state_dir>``. ``driver_materializes``: may
+    the driver read the iteration's url_hashes?"""
+
+    state_dir = "seen"
+    driver_materializes = True
+
+    def __init__(self, spark) -> None:
+        self.spark = spark
+        self.total = 0  # cumulative ledger size
+
+    def start(self, iter_dirs: list[str]) -> None:
+        self._load(iter_dirs[-1] if iter_dirs else None)
+        self.total = sum(_count_parquet(os.path.join(d, "seen")) for d in iter_dirs)
+
+    def _state(self, iter_dir: str) -> str:
+        path = os.path.join(iter_dir, self.state_dir)
+        if not os.path.isdir(path):
+            raise FileNotFoundError(f"committed iteration has no seen-filter state dir {path}")
+        return path
+
+    def seen_rows(self, delta: DataFrame) -> DataFrame:
+        return delta
+
+    def seen_total(self, seen_path: str) -> int:
+        self.total += _count_parquet(seen_path)
+        return self.total
+
+    def delete(self, url_hashes) -> int:
+        raise ValueError("mark_unseen requires seen_mode='cuckoo'")
+
+
+class ExactSeen(SeenFilter):
+    """Exact anti-join against one consolidated table: the ``seen`` dir
+    holds the whole set, rewritten every iteration (fixture-scale
+    determinism), and the driver reads no hashes."""
+
+    driver_materializes = False
+
+    def _load(self, iter_dir: str | None) -> None:
+        self.table = (
+            self.spark.read.parquet(self._state(iter_dir))
+            if iter_dir
+            else self.spark.createDataFrame([], SEEN_SCHEMA)
+        )
+
+    commit = _load
+
+    def probe(self, candidates: DataFrame) -> DataFrame:
+        return filter_unseen_exact(candidates, self.table)
+
+    def seen_rows(self, delta: DataFrame) -> DataFrame:
+        return delta.unionByName(self.table).dropDuplicates(["url_hash"])
+
+    def add(self, seen_path: str, tmp: str, write) -> None:
+        pass  # the seen dir is this filter's whole state
+
+    def seen_total(self, seen_path: str) -> int:
+        return _count_parquet(seen_path)
+
+
+class DriverFilter(SeenFilter):
+    """Shards held in driver memory (:class:`BloomShards` or
+    ``CuckooShards``): broadcast probe, driver-side update from the
+    iteration's ``seen`` dir, checkpointed with :func:`write_shards`.
+
+    ``_at`` is the committed ``iter=K`` dir the in-memory shards
+    reflect. :meth:`add` clears it just before the first mutation and
+    :meth:`commit` sets it after the rename, so :meth:`start` keeps live
+    shards (and any ``mark_unseen`` deletes since) only when they match
+    the checkpoint it resumes from, and otherwise re-reads the committed
+    shards: a failure between the update and the rename never leaves
+    that iteration's url_hashes in the filter — a bloom filter could
+    never forget them. A failure before the update keeps the shards."""
+
+    def __init__(self, spark, empty) -> None:
+        super().__init__(spark)
+        self._empty = empty  # () -> empty shards at the configured geometry
+        self.shards = empty()
+        self._at: str | None = None
+
+    def _load(self, iter_dir: str | None) -> None:
+        if iter_dir is None:
+            self.shards, self._at = self._empty(), None
+        elif iter_dir != self._at:
+            self.shards, self._at = type(self.shards).read(self._state(iter_dir)), iter_dir
+
+    def probe(self, candidates: DataFrame) -> DataFrame:
+        return self.shards.filter_unseen(candidates)
+
+    def add(self, seen_path: str, tmp: str, write) -> None:
+        self._at = None
+        self._update(seen_path)
+        self.shards.write(os.path.join(tmp, self.state_dir))
+
+    def _update(self, seen_path: str) -> None:
+        self.shards.add_hashes(_read_col(seen_path, "url_hash").astype(np.int64))
+
+    def commit(self, iter_dir: str) -> None:
+        self._at = iter_dir
+
+
+class BloomDriverFilter(DriverFilter):
+    """Bloom blobs in driver memory, probed by broadcast — right while
+    they fit the driver. A delta past ``delta_driver_limit`` rows is
+    built into fixed-geometry blobs distributed and OR-merged as
+    (bounded-size) blob rows: the driver never pulls its raw hashes."""
+
+    state_dir = "seen_shards"
+
+    def __init__(self, spark, empty, delta_driver_limit: int) -> None:
+        super().__init__(spark, empty)
+        self.delta_driver_limit = delta_driver_limit
+
+    def _update(self, seen_path: str) -> None:
+        if _count_parquet(seen_path) <= self.delta_driver_limit:
+            return super()._update(seen_path)
+        s = self.shards
+        s.add_blob_rows(
+            build_bloom_delta_shards(
+                self.spark.read.parquet(seen_path), s.n_shards, s.n_bits, s.n_hashes
+            ).collect()
+        )
+
+
+class BloomTableFilter(SeenFilter):
+    """Blobs live only as the checkpointed ``seen_shards`` table — the
+    10^10-URL path: shard-join probe, distributed OR-merge update
+    (:func:`update_bloom_shards`); the driver never materializes a hash
+    or a blob."""
+
+    state_dir = "seen_shards"
+    driver_materializes = False
+
+    def __init__(self, spark, n_shards: int, n_bits: int, n_hashes: int) -> None:
+        super().__init__(spark)
+        self.n_shards, self.n_bits, self.n_hashes = n_shards, n_bits, n_hashes
+
+    def _load(self, iter_dir: str | None) -> None:
+        # None: no blob yet, so nothing to probe until the first update
+        self.table = self.spark.read.parquet(self._state(iter_dir)) if iter_dir else None
+
+    commit = _load
+
+    def probe(self, candidates: DataFrame) -> DataFrame:
+        if self.table is None:
+            return candidates
+        return filter_unseen_bloom(candidates, self.table, self.n_shards, mode="shard_join")
+
+    def add(self, seen_path: str, tmp: str, write) -> None:
+        base = self.table
+        if base is None:
+            base = self.spark.createDataFrame([], BLOOM_SCHEMA)
+        delta = self.spark.read.parquet(seen_path).select("url_hash")
+        write(
+            update_bloom_shards(delta, base, self.n_shards, self.n_bits, self.n_hashes),
+            self.state_dir,
+        )
+
+
+def seen_filter(
+    spark,
+    seen_mode: str,
+    bloom_impl: str,
+    n_shards: int,
+    expected_urls: int,
+    delta_driver_limit: int,
+) -> SeenFilter:
+    """Build ``CrawlEngine``'s seen filter: ``seen_mode="exact"`` →
+    :class:`ExactSeen`; ``"bloom"`` (no false negatives, no deletes)
+    with ``bloom_impl="driver"`` → :class:`BloomDriverFilter`, with
+    ``"table"`` → :class:`BloomTableFilter`; ``"cuckoo"`` →
+    ``cuckoo.CuckooFilter`` (deletes: the ``mark_unseen`` re-crawl hook
+    bloom cannot express; Fan et al. CoNEXT'14). Probabilistic filters
+    are sized for ``expected_urls`` over ``n_shards`` shards."""
+    if seen_mode == "exact":
+        return ExactSeen(spark)
+    if seen_mode == "cuckoo":
+        from pubcrawler_spark.operators.cuckoo import CuckooFilter, CuckooShards
+
+        return CuckooFilter(spark, lambda: CuckooShards.sized(expected_urls, n_shards=n_shards))
+    bloom = lambda: BloomShards.sized(expected_urls, n_shards=n_shards)  # noqa: E731
+    if seen_mode == "bloom" and bloom_impl == "driver":
+        return BloomDriverFilter(spark, bloom, delta_driver_limit)
+    if seen_mode == "bloom" and bloom_impl == "table":
+        g = bloom()
+        return BloomTableFilter(spark, n_shards, g.n_bits, g.n_hashes)
+    raise ValueError(f"unknown seen configuration {seen_mode!r} / {bloom_impl!r}")

@@ -67,6 +67,13 @@ def test_cuckoo_overfull_raises():
         s.insert(rng.integers(-(2**62), 2**62, size=500, dtype=np.int64))
 
 
+def test_cuckoo_shard_rejects_bad_bucket_count():
+    # the in-batch (fp, min bucket) dedup key is only sound when the
+    # i1 <-> i2 XOR relation is an involution: a power of two < 2**32
+    with pytest.raises(ValueError, match="power of two"):
+        CuckooShard(12)
+
+
 def test_cuckoo_shards_roundtrip_and_probe(spark, tmp_path):
     from pubcrawler_spark.operators.seen import filter_unseen_exact
 
@@ -117,9 +124,9 @@ def test_engine_cuckoo_matches_mirror(spark, tmp_path):
     probe = spark.createDataFrame(
         [(victim.url_hash, victim.url_canon)], "url_hash long, url_canon string"
     )
-    assert eng._cuckoo.filter_unseen(probe).count() == 0  # currently seen
+    assert eng.seen_filter.probe(probe).count() == 0  # currently seen
     assert eng.mark_unseen([victim.url_hash]) == 1
-    assert eng._cuckoo.filter_unseen(probe).count() == 1  # re-admitted
+    assert eng.seen_filter.probe(probe).count() == 1  # re-admitted
     # resume continues from checkpoint shards that still include it
     with pytest.raises(ValueError):
         CrawlEngine(

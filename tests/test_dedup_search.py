@@ -1,5 +1,5 @@
-"""Dedup + search + ANN + multimodal + streaming operator tests on
-fixtures with planted ground truth."""
+"""Dedup + search + ANN operator tests on fixtures with planted ground
+truth."""
 
 from __future__ import annotations
 
@@ -7,7 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from pubcrawler_spark.operators import ann, dedup, multimodal, search
+from pubcrawler_spark.operators import ann, dedup, search
 
 
 @pytest.fixture(scope="module")
@@ -225,103 +225,6 @@ def test_keyword_search_compiler(spark, docs):
     fields, general = search.parse_query('author:"john smith" title:bert attention')
     assert fields == [("authors", "john smith"), ("title", "bert")]
     assert general == ["attention"]
-
-
-def test_multimodal_plumbing(spark):
-    rows = multimodal.media_fixture_rows(48)
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    feats = multimodal.extract_features(df).collect()
-    assert len(feats) == 48
-    by_id = {r["media_id"]: r for r in feats}
-    assert all(r["decode_ok"] for r in feats)
-    assert all(len(r["feat"]) == 8 for r in feats)
-    # deterministic: same payload → same feature
-    again = {r["media_id"]: r["feat"] for r in multimodal.extract_features(df).collect()}
-    assert all(again[i] == by_id[i]["feat"] for i in by_id)
-    # real decode path is stubbed
-    with pytest.raises(multimodal.DecodeUnavailable):
-        multimodal.real_decode(b"x", "image/png")
-
-
-def test_multimodal_resize_and_frames(spark):
-    rows = multimodal.media_fixture_rows(48)
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    n_images = sum(1 for r in rows if r[1] == "image")
-    n_videos = sum(1 for r in rows if r[1] == "video")
-
-    resized = multimodal.resize_images(df, 32, 32).collect()
-    assert len(resized) == n_images
-    assert all(r["decode_ok"] and len(r["payload"]) == 32 * 32 * 3 for r in resized)
-    # deterministic across recomputation
-    again = {r["media_id"]: bytes(r["payload"]) for r in multimodal.resize_images(df, 32, 32).collect()}
-    assert all(again[r["media_id"]] == bytes(r["payload"]) for r in resized)
-
-    frames = multimodal.sample_frames(df, every_ms=250).collect()
-    # fixture videos are 1000 ms → ts 0,250,500,750 → 4 frames each
-    assert len(frames) == 4 * n_videos
-    by_vid = {}
-    for r in frames:
-        assert r["decode_ok"] and r["frame"] is not None
-        by_vid.setdefault(r["media_id"], []).append((r["frame_idx"], r["ts_ms"]))
-    assert all(sorted(v) == [(0, 0), (1, 250), (2, 500), (3, 750)] for v in by_vid.values())
-    # distinct frames from the same payload (frame_idx enters the fake)
-    one = [bytes(r["frame"]) for r in frames if r["media_id"] == min(by_vid)]
-    assert len(set(one)) == len(one)
-
-
-def test_streaming_ingest_and_rates(spark, tmp_path):
-    from pubcrawler_spark.fixtures import PAGES_DDL, generate_pages, pages_spark_df
-    from pubcrawler_spark.streaming import micro
-
-    fx = generate_pages(120)
-    src = str(tmp_path / "in")
-    pages_spark_df(spark, fx).write.parquet(src)
-
-    dedup_stream = micro.incremental_page_ingest(spark, src, PAGES_DDL)
-    out1 = str(tmp_path / "out1")
-    micro.run_available_now(dedup_stream, str(tmp_path / "ck1"), out1)
-    got = spark.read.parquet(out1)
-    n_unique = (
-        pages_spark_df(spark, fx).count()
-    )
-    assert got.select("url_hash").distinct().count() == got.count()
-    assert got.count() <= n_unique
-
-    rates = micro.windowed_host_rates(
-        spark.readStream.schema(PAGES_DDL).parquet(src)
-    )
-    micro.run_complete_to_memory(rates, "host_rates", str(tmp_path / "ck2"))
-    r = spark.sql("select * from host_rates")
-    assert r.count() > 0
-    assert set(r.columns) == {"window_start", "host", "n_fetched"}
-    # totals reconcile with the batch count
-    total = r.agg({"n_fetched": "sum"}).collect()[0][0]
-    assert total == pages_spark_df(spark, fx).count()
-
-    # custom stateful operator (applyInPandasWithState): cumulative
-    # per-host totals; multiple micro-batches so state actually carries
-    stateful = micro.stateful_host_totals(
-        spark.readStream.schema(PAGES_DDL).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    q = (
-        stateful.writeStream.format("memory")
-        .queryName("host_totals")
-        .option("checkpointLocation", str(tmp_path / "ck3"))
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.sql("select host, max(total_fetched) as total from host_totals group by host")
-    want = (
-        pages_spark_df(spark, fx)
-        .selectExpr("parse_url(url, 'HOST') as host")
-        .groupBy("host")
-        .count()
-    )
-    got = {r["host"]: r["total"] for r in out.collect()}
-    for r in want.collect():
-        assert got.get(r["host"]) == r["count"], (r["host"], got.get(r["host"]), r["count"])
 
 
 def test_verify_pairs_exact_equals_allpairs(spark, docs):

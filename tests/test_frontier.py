@@ -10,6 +10,8 @@ Checks, per the north rule:
 
 from __future__ import annotations
 
+import os
+import re
 import shutil
 
 import pytest
@@ -53,8 +55,8 @@ def mirror_result(fixture):
     )
 
 
-def _run_engine(spark, fixture, tmp, seen_mode="exact", resume_at=None, **kw):
-    engine = CrawlEngine(
+def _make_engine(spark, fixture, tmp, seen_mode="exact", **kw):
+    return CrawlEngine(
         spark,
         pages_spark_df(spark, fixture),
         robots_spark_df(spark, fixture),
@@ -67,6 +69,10 @@ def _run_engine(spark, fixture, tmp, seen_mode="exact", resume_at=None, **kw):
         iteration_window_ms=WINDOW_MS,
         **kw,
     )
+
+
+def _run_engine(spark, fixture, tmp, seen_mode="exact", resume_at=None, **kw):
+    engine = _make_engine(spark, fixture, tmp, seen_mode, **kw)
     if resume_at is not None:
         engine.run(max_iterations=resume_at)
         # simulate crash: an in-progress tmp dir is left behind
@@ -158,12 +164,12 @@ def test_engine_matches_mirror_bloom_table(spark, fixture, mirror_result, tmp_pa
     """bloom_impl='table' (shard-join probe + distributed OR-merge
     update) matches the mirror AND never pulls url hashes to the driver:
     the pyarrow column reader is poisoned for the whole run."""
-    from pubcrawler_spark.plans import frontier as frontier_mod
+    from pubcrawler_spark.operators import seen as seen_mod
 
     def _boom(*a, **k):
         raise AssertionError("driver materialized url hashes in table mode")
 
-    monkeypatch.setattr(frontier_mod, "_read_col", _boom)
+    monkeypatch.setattr(seen_mod, "_read_col", _boom)
     engine = _run_engine(
         spark, fixture, tmp_path / "ckt", seen_mode="bloom", bloom_impl="table"
     )
@@ -187,12 +193,12 @@ def test_bloom_driver_distributed_delta(spark, fixture, mirror_result, tmp_path,
     """Driver impl past the delta-size gate (forced to 0): deltas are
     built distributed and OR-merged as blob rows — same schedule, and
     the raw-hash pull path is never taken."""
-    from pubcrawler_spark.plans import frontier as frontier_mod
+    from pubcrawler_spark.operators import seen as seen_mod
 
     def _boom(*a, **k):
         raise AssertionError("driver pulled raw hashes past the delta gate")
 
-    monkeypatch.setattr(frontier_mod, "_read_col", _boom)
+    monkeypatch.setattr(seen_mod, "_read_col", _boom)
     engine = _run_engine(
         spark, fixture, tmp_path / "ckg", seen_mode="bloom",
         bloom_delta_driver_limit=0,
@@ -217,6 +223,70 @@ def test_resume_equals_uninterrupted(spark, fixture, mirror_result, tmp_path):
     sched = engine.full_schedule()
     fetched = sched.filter("fetched")
     assert fetched.count() == fetched.select("url_canon").distinct().count()
+
+
+@pytest.mark.parametrize("seen_mode", ["bloom", "cuckoo"])
+def test_resume_after_failed_commit_same_engine(
+    spark, fixture, mirror_result, tmp_path, monkeypatch, seen_mode
+):
+    """The commit rename of iteration 2 fails once, after the driver-held
+    filter already took that iteration's url_hashes. Resuming on the SAME
+    engine object must re-read the committed shards instead of keeping
+    the filter with the never-committed hashes (a bloom filter could
+    never forget them)."""
+    real_rename = os.rename
+    armed = [True]
+
+    def _rename(src, dst):
+        if armed[0] and dst.endswith("iter=2"):
+            armed[0] = False
+            raise OSError("injected commit failure")
+        return real_rename(src, dst)
+
+    engine = _make_engine(spark, fixture, tmp_path / "ckfail", seen_mode)
+    monkeypatch.setattr(os, "rename", _rename)
+    with pytest.raises(OSError, match="injected commit failure"):
+        engine.run(max_iterations=MAX_ITER)
+    assert engine.committed_iterations() == [0, 1]
+    engine.run(max_iterations=MAX_ITER, resume=True)
+    _assert_matches_mirror(engine, mirror_result, fixture)
+
+
+@pytest.mark.parametrize(
+    "seen_mode,bloom_impl",
+    [("exact", "driver"), ("bloom", "driver"), ("bloom", "table"), ("cuckoo", "driver")],
+)
+def test_resume_after_iteration_that_marked_nothing_seen(spark, tmp_path, seen_mode, bloom_impl):
+    """Seeds absent from the corpus: every fetch misses and no URL is
+    robots-disallowed, so iteration 0 marks nothing seen and its filter
+    checkpoint holds zero shards. A fresh engine resumes from it. A
+    checkpoint whose filter state dir is gone fails resume with an
+    error naming that dir."""
+    small = generate_pages(60)
+    seeds = ["https://absent.example/a", "https://absent.example/b"]
+
+    def engine():
+        return CrawlEngine(
+            spark, pages_spark_df(spark, small), robots_spark_df(spark, small), seeds,
+            checkpoint_dir=str(tmp_path / "ckz"), year=YEAR, host_budget=BUDGET,
+            seen_mode=seen_mode, bloom_impl=bloom_impl, iteration_window_ms=WINDOW_MS,
+        )
+
+    assert engine().run(max_iterations=1)["scheduled"] == len(seeds)
+    resumed = engine()
+    assert resumed.run(max_iterations=3, resume=True)["iterations"] == 2
+    mirror = rm.mirror_crawl(
+        {r["url"]: r["html"] for r in small.rows}, seeds, small.robots,
+        host_budget=BUDGET, max_iterations=3, year=YEAR,
+        index_url_pred=is_index_url, iteration_window_ms=WINDOW_MS,
+    )
+    assert len(mirror["schedule"]) == 3 * len(seeds) and not mirror["seen"]
+    _assert_matches_mirror(resumed, mirror, small)
+
+    state = os.path.join(resumed._iter_dir(2), resumed.seen_filter.state_dir)
+    shutil.rmtree(state)
+    with pytest.raises(FileNotFoundError, match=re.escape(state)):
+        engine().run(max_iterations=4, resume=True)
 
 
 def test_fetch_retry_semantics(spark, tmp_path):
